@@ -1,25 +1,25 @@
 """The repository benchmark: one Spark session and one closed-loop client.
 
-    python3 perfbench/run.py --workload kv_read --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload kv_mixed --seed 1 --seconds 15 --trace 0
 
 Run it from the repository root. Workloads (see perfbench/README.md for why
 each was chosen):
 
-- ``kv_read``: point reads, multi-gets, prefix/range scans and predicated
-  counts over one compacted base.
 - ``kv_mixed``: 1000-cell write batches into a version-limited family, each
-  followed by a tiered-compaction worker call and reads; periodic row
-  deletes and version GC.
+  followed by a tiered-compaction worker call and reads; a row delete and
+  version GC once per cycle.
 - ``analytics``: a fixed slice of the query registry, whole passes in a
-  seeded order, each query materialized by a count.
+  fixed order, each query materialized by a count.
+- ``kv_read`` (not in BENCHMARK.json): point reads, multi-gets, prefix/range
+  scans and predicated counts over one compacted base, until a deadline.
 
 Inputs are generated from ``--seed`` inside ``perfbench/.work``. Every op
 result is checked against an expectation computed outside the timed loop.
 With ``--trace 0`` the last stdout line carries the end-to-end metrics;
-with ``--trace 1`` every op is traced: the run records
-spans and Spark job/task data for each op, and the last line
-carries the per-layer metrics. Lines before it are a human-readable
-report of every metric with its unit and sample count.
+with ``--trace 1`` every op is traced: the run records spans and Spark
+job/task data for each op, and the last line carries the per-layer
+metrics. Lines before it are a human-readable report of every metric with
+its unit and sample count.
 """
 
 from __future__ import annotations
