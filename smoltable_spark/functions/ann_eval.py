@@ -57,10 +57,10 @@ def ivf_index_health(
     DuckDB-oracle-checkable. 100 TB: one footer walk, amortizable via
     the store's chain-manifest pattern; the report is the cheap gate in
     front of the expensive maintenance it recommends."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import footer_row_count, store_fs_for
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, gmap, meta = _ivf_pointer(fs, base)
     rows_by_list: dict[int, int] = {}
     for name, is_dir in fs.list_status(base):
@@ -72,11 +72,11 @@ def ivf_index_health(
             continue
         if k in gmap:
             continue  # stale pre-fold dir shielded by the pointer
-        rows_by_list[k] = fs.parquet_dir_rows(f"{base}/{name}")
+        rows_by_list[k] = footer_row_count(fs, f"{base}/{name}")
     for k, g in gmap.items():
         if g >= 1:
-            rows_by_list[k] = fs.parquet_dir_rows(
-                f"{base}/{_GEN_ROOT}/g={g}/list_id={k}"
+            rows_by_list[k] = footer_row_count(
+                fs, f"{base}/{_GEN_ROOT}/g={g}/list_id={k}"
             )
     rows_total = sum(rows_by_list.values())
     # live tombstone legs: pointer-aware, mirroring ivf_tombstones
@@ -88,7 +88,7 @@ def ivf_index_health(
         if not is_dir:
             continue
         if (name.startswith("d-") and name not in folded) or name in keep:
-            tombs += fs.parquet_dir_rows(f"{troot}/{name}")
+            tombs += footer_row_count(fs, f"{troot}/{name}")
     n_lists = len(rows_by_list)
     rows_max = max(rows_by_list.values(), default=0)
     rows_min = min(rows_by_list.values(), default=0)

@@ -21,7 +21,7 @@ compaction story the CellStore uses for table data.
 
 Filesystem contract (round 11, VERDICT r10 ask #1): the WHOLE
 maintenance family — append, delete, fold, compact — goes through the
-Hadoop FileSystem API (``sources/hadoop_fs.py``), so an index hosted on
+CellStore's metadata adapter (``sources/store_fs.py``), so an index hosted on
 ``hdfs://`` or ``s3a://`` is maintained from any driver, no local mount
 required. The r9–r10 version used raw ``os.rename``/``os.listdir`` for
 delete/fold/compact, which bound upsert-heavy workloads to a single
@@ -45,9 +45,9 @@ pointer-generation scheme ``CellStore`` uses for ``_VERSION``.
 pointer retention; ``allow_non_atomic_swap=True`` retains its r12
 meaning for pointer-less indexes (assert a no-readers maintenance
 window, use the cheaper in-place swap). Bare paths dispatch through
-``fs_for``'s defaultFS-aware rule — shared verbatim with the
-CellStore's adapter (round 13), so a bare-path index, a bare-path
-store, and Spark's own data plane always address the same filesystem.
+``store_fs_for``'s defaultFS-aware rule — the CellStore's own — so a
+bare-path index, a bare-path store, and Spark's own data plane always
+address the same filesystem.
 """
 
 from __future__ import annotations
@@ -59,11 +59,17 @@ from smoltable_spark.functions.similarity import (
     _LISTGEN_PREFIX,
     _collected_centroids,
     _ivf_pointer,
+    _parse_listgen,
     _with_nearest_list,
     read_ivf_lists,
     with_quantized_norm,
 )
-from smoltable_spark.sources.hadoop_fs import fs_for
+from smoltable_spark.sources.store_fs import (
+    footer_row_count,
+    generation_numbers,
+    publish_generation,
+    store_fs_for,
+)
 
 
 class ConcurrentIndexCommitError(IOError):
@@ -91,11 +97,12 @@ def _commit_listgen(
     fs, base: str, m_new: int, lists: dict[int, int],
     tomb_keep: list[str], tomb_folded: list[str],
 ) -> None:
-    """CAS-publish pointer generation ``m_new`` (create-if-absent, like
-    ``CellStore._commit_version``): exactly one winner per pointer
-    number; a torn previous attempt (unparsable content) is swept and
-    re-CASed once; a parsable collision is a concurrent maintenance
-    writer and raises loudly."""
+    """CAS-publish pointer generation ``m_new`` through
+    ``store_fs.publish_generation`` — the CellStore's ``_VERSION``
+    publisher: exactly one winner per pointer number; a torn previous
+    attempt (unparsable content) is swept and re-CASed once; a parsable
+    collision is a concurrent maintenance writer and raises
+    :class:`ConcurrentIndexCommitError`."""
     import json
 
     content = json.dumps(
@@ -106,27 +113,9 @@ def _commit_listgen(
             "tomb_folded": sorted(tomb_folded),
         }
     )
-    target = f"{base}/{_LISTGEN_PREFIX}{m_new}"
-    for _attempt in range(2):
-        try:
-            fs.create_exclusive(target, content)
-            return
-        except FileExistsError:
-            try:
-                import json as _json
-
-                _json.loads(fs.read_text(target))
-            except (ValueError, FileNotFoundError):
-                fs.delete(target, recursive=False)
-                continue  # torn pre-commit garbage: sweep and re-CAS
-            raise ConcurrentIndexCommitError(
-                f"IVF pointer commit v{m_new} in {base} lost the "
-                f"create-if-absent race: {target} was published by a "
-                "concurrent maintenance writer."
-            )
-    raise ConcurrentIndexCommitError(
-        f"IVF pointer commit v{m_new} in {base} collided twice while "
-        "sweeping torn garbage — a concurrent maintenance writer is live."
+    publish_generation(
+        fs, base, _LISTGEN_PREFIX, m_new, content, _parse_listgen,
+        ConcurrentIndexCommitError,
     )
 
 
@@ -183,7 +172,7 @@ def append_ivf_index(
     # (snapshot isolation), which is the table-format layer's job.
     base = path.rstrip("/")
     staging = base + "/.staging-append"
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     # ADVICE r7: a crash mid-publish leaves SOME delta files already
     # renamed into the index with the staging dir still present; blindly
     # re-running the append would overwrite staging and re-publish the
@@ -278,23 +267,24 @@ def append_ivf_index(
             # revival visible all-or-nothing
             dst_dir = f"{base}/{_GEN_ROOT}/g={m + 1}/{part}"
             revived[k] = m + 1
-        fs.mkdirs(dst_dir)
+        fs.makedirs(dst_dir)
         for name, _ in fs.list_status(f"{staging}/{part}"):
             if name.startswith("_") or name.startswith("."):
                 continue
-            # task-UUID filenames: no collision with base files. Hadoop
-            # rename reports failure via its RETURN VALUE, not an
-            # exception — an unchecked false (dst exists, concurrent
-            # appender on the fixed staging path, fs quirk) would leave
-            # the file in staging and the delete below would destroy it:
-            # a silent data-loss append. Fail loudly instead.
-            if not fs.rename(f"{staging}/{part}/{name}", f"{dst_dir}/{name}"):
+            # task-UUID filenames: no collision with base files. A failed
+            # rename (dst exists, concurrent appender on the fixed
+            # staging path, fs quirk) must stop here: the staging delete
+            # below would otherwise destroy the unpublished file — a
+            # silent data-loss append.
+            try:
+                fs.rename(f"{staging}/{part}/{name}", f"{dst_dir}/{name}")
+            except OSError as e:
                 raise IOError(
                     f"IVF append publish failed: could not rename "
                     f"{staging}/{part}/{name} into {dst_dir}; staging left "
                     f"in place for inspection (single-writer contract "
                     f"violated, or a stale destination file exists)"
-                )
+                ) from e
     if revived:
         # pointer BEFORE the staging delete: a crash in between leaves
         # the staging dir as fail-fast evidence, never silently-lost
@@ -304,7 +294,7 @@ def append_ivf_index(
             list(meta.get("tomb_keep", [])),
             list(meta.get("tomb_folded", [])),
         )
-    fs.delete(staging)
+    fs.rmtree(staging)
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +350,7 @@ def delete_from_ivf_index(
     import uuid
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     # sweep rollback artifacts of a crashed PREVIOUS delete: a leftover
     # .staging-delete-* was never published (the atomic rename into
     # _tombstones/ is the commit point), so under the single-writer
@@ -369,7 +359,7 @@ def delete_from_ivf_index(
     # needs reconciliation
     for d in fs.listdir(base):
         if d.startswith(".staging-delete-"):
-            fs.delete(f"{base}/{d}")
+            fs.rmtree(f"{base}/{d}")
     # ADVICE r10 (low): after a crashed fold, a list partition may be
     # sitting retired inside staging — the victim→list resolution below
     # would then record 0 hits for ids in that list (treated as absent),
@@ -395,16 +385,16 @@ def delete_from_ivf_index(
     # staged parquet FOOTERS (driver-side metadata read — FS-agnostic,
     # no second job over the join)
     hits.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = fs.parquet_dir_rows(staging)
+    n = footer_row_count(fs, staging)
     if n == 0:
-        fs.delete(staging)
+        fs.rmtree(staging)
         return 0
     dst_root = f"{base}/{_TOMBSTONE_ROOT}"
-    fs.mkdirs(dst_root)
+    fs.makedirs(dst_root)
     # atomic publish (dir rename on HDFS/local; see module header
     # for the S3A caveat — an unpublished staging dir is swept by
     # the next delete, so a torn copy never becomes a tombstone leg)
-    fs.rename_or_raise(staging, f"{dst_root}/d-{tag}", "tombstone publish")
+    fs.rename(staging, f"{dst_root}/d-{tag}")
     return int(n)
 
 
@@ -461,7 +451,7 @@ def _fold_tombstones(
     import uuid
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     # ADVICE r10 (low): run the crash-evidence check BEFORE the
     # no-tombstones early return — an index whose tombstone legs were
     # cleared during partial manual reconciliation but that still has
@@ -494,18 +484,18 @@ def _fold_tombstones(
     leg_names = []  # their basenames — the next pointer's tomb_folded
     for d, is_dir in fs.list_status(troot):
         if d.startswith(".staging-rewrite-"):
-            fs.delete(f"{troot}/{d}")
+            fs.rmtree(f"{troot}/{d}")
         elif not is_dir:
             continue
         elif (d.startswith("d-") and d not in folded_names) or d in keep_names:
             legs.append(f"{troot}/{d}")
             leg_names.append(d)
         elif d.startswith(".t-"):
-            fs.delete(f"{troot}/{d}")  # unreferenced kept-leg: rollback
+            fs.rmtree(f"{troot}/{d}")  # unreferenced kept-leg: rollback
     # total tombstone rows from the legs' parquet FOOTERS — driver-side
     # metadata, no Spark job; n_folded derives from it (total − kept)
     # so neither the full fold nor the subset fold pays a count job
-    tombs_total = sum(fs.parquet_dir_rows(d) for d in legs)
+    tombs_total = sum(footer_row_count(fs, d) for d in legs)
     if tombs_total == 0:
         return {"tombstones": 0, "lists_rewritten": 0}
     fold_df = None
@@ -583,7 +573,7 @@ def _fold_tombstones(
         n_folded = tombs_total - kept
         if n_folded == 0:
             if stage is not None:
-                fs.delete(stage)
+                fs.rmtree(stage)
             return {"tombstones": 0, "lists_rewritten": 0}
         # tolerate already-removed list dirs (a fully-tombstoned list
         # from a previous fold, or a replay after manual crash
@@ -595,7 +585,7 @@ def _fold_tombstones(
             if int(r["folded"]) == 0:
                 continue  # kept-only list: nothing of it folds
             d = _serving_dir(base, gmap, r["list_id"])
-            if d is not None and fs.is_dir(d):
+            if d is not None and fs.isdir(d):
                 affected.append(r["list_id"])
         affected.sort()
         victims = fold_df.select("vec_id").distinct()
@@ -637,7 +627,7 @@ def _fold_tombstones(
             # legs, so a crash mid-sweep leaves only ignored garbage
             # (vacuum_ivf_index finishes the job)
             for d in legs:
-                fs.delete(d)
+                fs.rmtree(d)
             return {
                 "tombstones": int(n_folded),
                 "lists_rewritten": len(affected),
@@ -660,24 +650,20 @@ def _fold_tombstones(
                 # until the final rename, and a crash from here on
                 # leaves recoverable evidence instead of a
                 # silently-vanished list
-                if fs.is_dir(staged):
-                    fs.rename_or_raise(staged, new, "fold publish-beside")
-                if fs.is_dir(old):
-                    fs.rename_or_raise(
-                        old, f"{staging}/.retired-{l}", "fold retire"
-                    )
-                if fs.is_dir(new):
-                    fs.rename_or_raise(new, old, "fold swap-in")
+                if fs.isdir(staged):
+                    fs.rename(staged, new)
+                if fs.isdir(old):
+                    fs.rename(old, f"{staging}/.retired-{l}")
+                if fs.isdir(new):
+                    fs.rename(new, old)
                 # a list whose every row was tombstoned has no staged
                 # dir: the partition simply disappears (an empty LSM
                 # level)
-            fs.delete(staging)
+            fs.rmtree(staging)
         if stage is not None:
-            fs.rename_or_raise(
-                stage, f"{troot}/d-{tag}", "tombstone-rewrite publish"
-            )
+            fs.rename(stage, f"{troot}/d-{tag}")
         for d in legs:
-            fs.delete(d)
+            fs.rmtree(d)
         return {"tombstones": int(n_folded), "lists_rewritten": len(affected)}
     finally:
         tombs.unpersist()
@@ -714,7 +700,7 @@ def compact_ivf_index(
     update), fails fast on crash evidence from a previous legacy fold
     (``_check_fold_crash_evidence``), and — like the whole maintenance
     family since round 11 — runs against any Hadoop-supported
-    filesystem via ``sources/hadoop_fs.py``. ``allow_non_atomic_swap``
+    filesystem via ``sources/store_fs.py``. ``allow_non_atomic_swap``
     retains its r12 meaning for pointer-less indexes on rename-unsafe
     schemes: assert a no-concurrent-readers window and use the cheaper
     in-place swap instead of going generational."""
@@ -748,28 +734,20 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
     generational to reclaim. Single-maintenance-writer contract, like
     the fold family. Returns counts of reclaimed dirs per kind."""
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     keep_pointers = max(1, keep_pointers)
-    import json
-
-    nums = []
-    for name, is_dir in fs.list_status(base):
-        if is_dir or not name.startswith(_LISTGEN_PREFIX):
-            continue
-        try:
-            nums.append(int(name[len(_LISTGEN_PREFIX):]))
-        except ValueError:
-            continue
+    nums = generation_numbers(fs, base, _LISTGEN_PREFIX)
     if not nums:
         return {"pointers": 0, "generations": 0, "plain_dirs": 0, "tomb_legs": 0}
-    nums.sort(reverse=True)
     retained, dropped = nums[:keep_pointers], nums[keep_pointers:]
     maps = []
     current_meta: dict = {}
     for i, mnum in enumerate(retained):
         try:
-            d = json.loads(fs.read_text(f"{base}/{_LISTGEN_PREFIX}{mnum}"))
-            maps.append({int(k): int(g) for k, g in d["lists"].items()})
+            gmap, d = _parse_listgen(
+                fs.read_text(f"{base}/{_LISTGEN_PREFIX}{mnum}")
+            )
+            maps.append(gmap)
             if i == 0:
                 current_meta = d
         except (ValueError, KeyError):
@@ -786,7 +764,7 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
         except ValueError:
             continue
         if g not in live_gens:
-            fs.delete(f"{gen_root}/{name}")
+            fs.rmtree(f"{gen_root}/{name}")
             stats["generations"] += 1
     # stale plain dirs: shielded by every retained pointer
     for name, is_dir in fs.list_status(base):
@@ -797,18 +775,21 @@ def vacuum_ivf_index(spark, path: str, keep_pointers: int = 2) -> dict:
         except ValueError:
             continue
         if maps and all(k in mp for mp in maps):
-            fs.delete(f"{base}/{name}")
+            fs.rmtree(f"{base}/{name}")
             stats["plain_dirs"] += 1
     # tombstone legs the current pointer already excludes
     troot = f"{base}/{_TOMBSTONE_ROOT}"
     folded = set(current_meta.get("tomb_folded", []))
     for name, is_dir in fs.list_status(troot):
         if is_dir and name in folded:
-            fs.delete(f"{troot}/{name}")
+            fs.rmtree(f"{troot}/{name}")
             stats["tomb_legs"] += 1
     # old pointer files last: everything they referenced is now gone or
     # re-referenced by a retained pointer
     for mnum in dropped:
-        fs.delete(f"{base}/{_LISTGEN_PREFIX}{mnum}", recursive=False)
+        try:
+            fs.remove(f"{base}/{_LISTGEN_PREFIX}{mnum}")
+        except FileNotFoundError:
+            pass
         stats["pointers"] += 1
     return stats

@@ -587,49 +587,38 @@ _LISTGEN_PREFIX = "_LISTGEN-v"
 _GEN_ROOT = ".gen"
 
 
+def _parse_listgen(text: str) -> tuple[dict[int, int], dict]:
+    """({list_id: generation}, full pointer meta) from ``_LISTGEN``
+    content; ValueError/KeyError on torn content."""
+    import json
+
+    d = json.loads(text)
+    return {int(k): int(g) for k, g in d["lists"].items()}, d
+
+
 def _ivf_pointer(fs, base: str) -> tuple[int, dict[int, int], dict]:
     """(pointer number, {list_id: generation}, full pointer meta) from
     the newest parsable ``_LISTGEN-v<m>``; (0, {}, {}) when the index
-    has never been folded on a rename-unsafe filesystem. Torn newest
-    pointers (crashed writer on a flush-visible scheme) are pre-commit
-    garbage: fall back to the next-lower parsable one, mirroring
-    ``CellStore.current_version``."""
-    import json
+    has never been folded on a rename-unsafe filesystem. Resolution is
+    ``store_fs.resolve_generation`` — the same resolver as
+    ``CellStore.current_version``: torn newest pointers fall back, and
+    pointers vacuumed mid-read re-list."""
+    from smoltable_spark.sources.store_fs import resolve_generation
 
-    gens = []
-    for name, is_dir in fs.list_status(base):
-        if is_dir or not name.startswith(_LISTGEN_PREFIX):
-            continue
-        try:
-            gens.append(int(name[len(_LISTGEN_PREFIX):]))
-        except ValueError:
-            continue
-    for m in sorted(gens, reverse=True):
-        try:
-            text = fs.read_text(f"{base}/{_LISTGEN_PREFIX}{m}")
-        except Exception:
-            # vacuumed between the listing and this read (an old pointer
-            # swept under a reader's feet — the max retained pointer is
-            # never deleted, so falling through is safe); a file that
-            # still exists is a real IO failure
-            if fs.exists(f"{base}/{_LISTGEN_PREFIX}{m}"):
-                raise
-            continue
-        try:
-            d = json.loads(text)
-            return m, {int(k): int(g) for k, g in d["lists"].items()}, d
-        except (ValueError, KeyError):
-            continue  # torn newest pointer: pre-commit garbage
-    return 0, {}, {}
+    got = resolve_generation(fs, base, _LISTGEN_PREFIX, _parse_listgen)
+    if got is None:
+        return 0, {}, {}
+    m, (gmap, meta) = got
+    return m, gmap, meta
 
 
 def ivf_list_generations(spark, path: str) -> tuple[int, dict[int, int]]:
     """(pointer number, {list_id: live generation}) of a persisted IVF
     index — (0, {}) for never-folded-on-rename-unsafe indexes."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
-    m, gmap, _meta = _ivf_pointer(fs_for(spark, base), base)
+    m, gmap, _meta = _ivf_pointer(store_fs_for(spark, base), base)
     return m, gmap
 
 
@@ -647,10 +636,10 @@ def read_ivf_lists(spark, path: str, list_ids=None):
     dirs of mapped lists are never listed), and mapped lists group into
     one read per generation with that generation's basePath, so the
     read fan-out is O(live generations), not O(lists)."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, gmap, _meta = _ivf_pointer(fs, base)
     if not gmap:
         df = spark.read.parquet(base)
@@ -699,24 +688,23 @@ def ivf_tombstones(spark, path: str):
     persisted IVF index, or None (functions/ann_index.py writes them
     under the underscore-prefixed ``_tombstones/`` root, invisible to
     the index's own partition discovery). Lives here so the serving
-    path needs no import of the maintenance module. Round 11 listed
-    through the Hadoop FS API so serving masks deletes on
-    object-store-hosted indexes too; round 12 (ADVICE r11) dispatches
-    like the CellStore adapter — bare paths use local syscalls (two
-    stat-class calls, zero Py4J traffic on the serving path), scheme
-    URIs one listStatus RPC — so a bare-path index and a bare-path
-    store always address the same filesystem.
+    path needs no import of the maintenance module. Lists through the
+    CellStore's own adapter (``store_fs.store_fs_for``), so serving
+    masks deletes on object-store-hosted indexes too — bare paths use
+    local syscalls (zero Py4J traffic on the serving path), scheme URIs
+    one listStatus RPC — and a bare-path index and a bare-path store
+    always address the same filesystem.
 
     Round 13: pointer-aware. With a ``_LISTGEN`` pointer, the live set
     is (all ``d-*`` legs minus the pointer's ``tomb_folded``) plus its
     ``tomb_keep`` legs — so a generation fold's tombstone transition is
     atomic with its list swap, and a crashed post-commit deletion sweep
     can only leave ignored garbage, never resurrect folded tombstones."""
-    from smoltable_spark.sources.hadoop_fs import fs_for
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = path.rstrip("/")
     root = base + "/_tombstones"
-    fs = fs_for(spark, base)
+    fs = store_fs_for(spark, base)
     _m, _gmap, meta = _ivf_pointer(fs, base)
     folded = set(meta.get("tomb_folded", []))
     keep = list(meta.get("tomb_keep", []))

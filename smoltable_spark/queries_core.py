@@ -390,7 +390,7 @@ def wc_store_unsafe_commit(spark, sf_dir):
     by the v3 chain; pointer generations below the retention cutoff
     removed, readers unaffected)."""
     from smoltable_spark.sources.store import CellStore, _VERSION_GEN_PREFIX
-    from smoltable_spark.sources.store_fs import LocalStoreFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS, generation_numbers
 
     class _UnsafeFS(LocalStoreFS):
         atomic_rename = False
@@ -418,7 +418,10 @@ def wc_store_unsafe_commit(spark, sf_dir):
 
     def _gens():
         return ",".join(
-            str(g) for g in sorted(store._pointer_generations())
+            str(g)
+            for g in sorted(
+                generation_numbers(store._fs, store.path, _VERSION_GEN_PREFIX)
+            )
         )
 
     def _cents(df):

@@ -91,7 +91,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from smoltable_spark.api import ColumnFamilyDef
 from smoltable_spark.schema import CELL_COLUMNS
-from smoltable_spark.sources.store_fs import publish_text, store_fs_for
+from smoltable_spark.sources.store_fs import (
+    footer_row_count,
+    publish_generation,
+    publish_text,
+    resolve_generation,
+    store_fs_for,
+)
 
 _VERSION_FILE = "_VERSION"
 #: rename-free pointer generations (``_VERSION-v<n>``) for filesystems
@@ -185,18 +191,6 @@ class CellStore:
             return int(d["v"]), legs
         return int(text), {}
 
-    def _pointer_generations(self) -> list[int]:
-        """Generation numbers of every ``_VERSION-v<n>`` file present
-        (one listing; staging leftovers and foreign names are ignored)."""
-        out = []
-        for name in self._fs.listdir(self.path):
-            if name.startswith(_VERSION_GEN_PREFIX) and not name.endswith(".tmp"):
-                try:
-                    out.append(int(name[len(_VERSION_GEN_PREFIX):]))
-                except ValueError:
-                    continue
-        return out
-
     def current_version(self) -> int:
         """Resolve the committed version: max over the plain ``_VERSION``
         pointer and any rename-free ``_VERSION-v<n>`` generations (both
@@ -205,67 +199,39 @@ class CellStore:
         handle (streaming CDC polls this per batch) must observe other
         writers' commits. Also refreshes the chain-manifest cache.
 
-        Two degraded states resolve instead of raising (ADVICE r12):
-
-        - **vacuum race**: a generation listed a moment ago can be gone
-          by the time it is read (other writers committed ≥ keep_last
-          newer versions and ``vacuum`` swept past it). Re-list and
-          retry — the newer max is guaranteed present, so each retry
-          strictly advances.
-        - **torn newest generation**: the CAS create is all-or-nothing
-          on object-store PUTs, but on flush-visible Hadoop schemes
-          (wasb/abfs) a writer crash between flush and close can leave
-          a half-written ``_VERSION-v<n>``. Unparsable content there is
-          pre-commit garbage, not a committed pointer: fall back to the
-          next-lower parsable generation (the next commit or vacuum
-          sweeps the torn file — see ``_commit_version``).
+        Generations resolve through ``store_fs.resolve_generation``
+        (shared with the IVF index's ``_LISTGEN`` pointer): a torn
+        newest generation falls back to the next-lower parsable one, and
+        a generation vacuumed between listing and read re-lists.
         """
+        best = None
         plain_path = os.path.join(self.path, _VERSION_FILE)
-        for _attempt in range(5):
-            best: tuple[int, dict] | None = None
-            if self._fs.exists(plain_path):
-                # the plain pointer is only ever published via atomic
-                # rename, so unparsable content is real corruption: raise
-                best = self._parse_pointer(self._fs.read_text(plain_path))
-            raced = False
-            for g in sorted(self._pointer_generations(), reverse=True):
-                if best is not None and best[0] >= g:
-                    break
-                gp = os.path.join(self.path, f"{_VERSION_GEN_PREFIX}{g}")
-                try:
-                    text = self._fs.read_text(gp)
-                except Exception:
-                    if self._fs.exists(gp):
-                        raise  # real IO failure, not a vacuum race
-                    raced = True
-                    break
-                try:
-                    best = self._parse_pointer(text)
-                    break
-                except ValueError:
-                    continue  # torn generation: try the next-lower one
-            if raced:
-                continue
-            if best is None:
-                return 0
-            self._chain_cache.update(best[1])
-            return best[0]
-        raise IOError(
-            f"current_version({self.path}): the max pointer generation "
-            "vanished between listing and read 5 times in a row — vacuum "
-            "is racing this reader faster than it can re-list (retention "
-            "keep_last is too small for the write rate)"
+        if self._fs.exists(plain_path):
+            # the plain pointer is only ever published via atomic
+            # rename, so unparsable content is real corruption: raise
+            best = self._parse_pointer(self._fs.read_text(plain_path))
+        gen = resolve_generation(
+            self._fs, self.path, _VERSION_GEN_PREFIX, self._parse_pointer,
+            above=best[0] if best else 0,
         )
+        if gen is not None:
+            best = gen[1]
+        if best is None:
+            return 0
+        self._chain_cache.update(best[1])
+        return best[0]
 
     def _commit_version(self, n: int) -> None:
         """Publish version ``n`` with its chain manifest. Atomic-rename
         filesystems swap the single ``_VERSION`` file (write-beside +
-        overwrite-rename); rename-unsafe schemes write a fresh
-        ``_VERSION-v<n>`` generation instead — a new key, complete on
-        close, so no reader can ever observe a torn pointer. Old
-        generations stay until ``vacuum`` sweeps past them (deleting
-        n-1 here could strand a reader that listed just before this
-        commit)."""
+        overwrite-rename); rename-unsafe schemes publish a fresh
+        ``_VERSION-v<n>`` generation create-if-absent instead
+        (``store_fs.publish_generation``) — a new key, complete on
+        close, so no reader can ever observe a torn pointer, and two
+        racing writers cannot silently last-writer-win: the loser raises
+        :class:`ConcurrentCommitError`. Old generations stay until
+        ``vacuum`` sweeps past them (deleting n-1 here could strand a
+        reader that listed just before this commit)."""
         manifest = {
             str(v): [kind, list(folds) if folds is not None else None]
             for v, (kind, folds) in self._trimmed_manifest(n).items()
@@ -276,43 +242,9 @@ class CellStore:
                 os.path.join(self.path, _VERSION_FILE), content
             )
             return
-        # Rename-free branch: the generation create is a CAS
-        # (create-if-absent — VERDICT r12 ask #1: a plain overwrite let
-        # two racing writers silently last-writer-win on exactly the
-        # multi-writer object-store deployments this protocol targets).
-        # One retry handles the torn-garbage case: a crashed writer on a
-        # flush-visible scheme can leave an UNPARSABLE _VERSION-v<n>
-        # (current_version skips it, so a fresh writer re-computes the
-        # same n and collides with garbage, not with a commit) — sweep
-        # it and re-CAS; a second collision is a real concurrent writer.
-        target = os.path.join(self.path, f"{_VERSION_GEN_PREFIX}{n}")
-        for _attempt in range(2):
-            try:
-                self._fs.create_exclusive(target, content)
-                return
-            except FileExistsError:
-                try:
-                    self._parse_pointer(self._fs.read_text(target))
-                except (ValueError, FileNotFoundError):
-                    # torn pre-commit garbage (or it just vanished):
-                    # sweep and retry the CAS — create_exclusive still
-                    # arbitrates if two writers both saw the garbage
-                    try:
-                        self._fs.remove(target)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                raise ConcurrentCommitError(
-                    f"commit of generation v{n} in {self.path} lost the "
-                    f"create-if-absent race: {target} was published by a "
-                    "concurrent writer between this writer's version "
-                    "resolution and its commit. Single-writer contract "
-                    "violated — see ConcurrentCommitError for recovery."
-                )
-        raise ConcurrentCommitError(
-            f"commit of generation v{n} in {self.path} collided twice "
-            f"(a concurrent writer re-published {target} while this "
-            "writer was sweeping torn garbage)"
+        publish_generation(
+            self._fs, self.path, _VERSION_GEN_PREFIX, n, content,
+            self._parse_pointer, ConcurrentCommitError,
         )
 
     def _trimmed_manifest(self, n: int) -> dict[int, tuple[str, tuple[int, int] | None]]:
@@ -477,6 +409,31 @@ class CellStore:
             .drop(seq, "__rn")
         )
 
+    def _batch_with_lg(
+        self, cells: DataFrame, seq_col: str | None, assume_unique_coords: bool
+    ) -> DataFrame:
+        """The cell columns of an incoming batch, deduplicated per
+        coordinate unless ``assume_unique_coords`` (``seq_col`` is the
+        tie-break, consumed either way), tagged with each family's
+        locality group — the shared front half of ``write`` and
+        ``append``."""
+        fam_lg = {
+            f: (g if g != "" else _DEFAULT_LG) for f, g in self.family_to_lg().items()
+        }
+        lg_expr = F.lit(_DEFAULT_LG)
+        if fam_lg:
+            mapping = F.create_map(
+                *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
+            )
+            lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
+        cols = list(CELL_COLUMNS) + ([seq_col] if seq_col else [])
+        df = cells.select(*cols)
+        if not assume_unique_coords:
+            df = self._dedup_coords(df, seq_col)
+        elif seq_col:
+            df = df.drop(seq_col)
+        return df.withColumn("lg", lg_expr)
+
     def write(
         self,
         cells: DataFrame,
@@ -497,24 +454,10 @@ class CellStore:
         cell per coordinate). At scale that dedup is a full shuffle of
         the table per compaction, paid for nothing.
         """
-        fam_lg = {
-            f: (g if g != "" else _DEFAULT_LG) for f, g in self.family_to_lg().items()
-        }
-        lg_expr = F.lit(_DEFAULT_LG)
-        if fam_lg:
-            mapping = F.create_map(
-                *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
-            )
-            lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
-        cols = list(CELL_COLUMNS) + ([seq_col] if seq_col else [])
-        df = cells.select(*cols)
-        if not assume_unique_coords:
-            df = self._dedup_coords(df, seq_col)
-        elif seq_col:
-            df = df.drop(seq_col)
-        df = df.withColumn("lg", lg_expr)
         return self._commit_snapshot(
-            df, kind="base", num_range_partitions=num_range_partitions
+            self._batch_with_lg(cells, seq_col, assume_unique_coords),
+            kind="base",
+            num_range_partitions=num_range_partitions,
         )
 
     #: parquet layout tuning — the reference picks 64 KiB LSM blocks because
@@ -717,24 +660,8 @@ class CellStore:
         coordinates are unique by construction (e.g. one cell per source
         row); like ``write``'s flag, it removes a full shuffle of the
         batch that would find nothing to drop."""
-        fam_lg = {
-            f: (g if g != "" else _DEFAULT_LG) for f, g in self.family_to_lg().items()
-        }
-        lg_expr = F.lit(_DEFAULT_LG)
-        if fam_lg:
-            mapping = F.create_map(
-                *[x for f, g in fam_lg.items() for x in (F.lit(f), F.lit(g))]
-            )
-            lg_expr = F.coalesce(mapping[F.col("family")], F.lit(_DEFAULT_LG))
-        cols = list(CELL_COLUMNS) + ([seq_col] if seq_col else [])
-        batch = cells.select(*cols)
-        if not assume_unique_coords:
-            batch = self._dedup_coords(batch, seq_col)
-        elif seq_col:
-            batch = batch.drop(seq_col)
         df = (
-            batch
-            .withColumn("lg", lg_expr)
+            self._batch_with_lg(cells, seq_col, assume_unique_coords)
             .sortWithinPartitions(
                 F.col("row_key").asc(),
                 F.col("family").asc(),
@@ -1112,12 +1039,7 @@ class CellStore:
         same way the reference is: shadowed duplicate coordinates across a
         base+delta chain are counted once per occurrence, so the value is
         an upper bound until ``compact()`` folds the chain."""
-        return sum(
-            self._fs.parquet_num_rows(full)
-            for d in self._chain_dirs()
-            for name, full, _sz in self._fs.walk_files(d)
-            if name.endswith(".parquet")
-        )
+        return sum(footer_row_count(self._fs, d) for d in self._chain_dirs())
 
     def disk_space_usage(self) -> int:
         """Bytes across the current snapshot's chain (reference mod.rs:906-922)."""

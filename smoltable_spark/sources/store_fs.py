@@ -1,26 +1,24 @@
-"""Filesystem adapter for the CellStore's driver-side METADATA ops —
-round 11, extending the r11 ANN-index port (``hadoop_fs.py``) to the
-table engine itself.
+"""Filesystem adapter for every driver-side METADATA op in the engine:
+the CellStore (family manifest, ``_VERSION`` pointer, per-leg ``_KIND``
+/ ``_FOLDS`` markers, vacuum's directory reclaim, parquet-footer stats),
+the streaming CDC rollup and dedup admitter state, and the persisted
+IVF index (``_LISTGEN`` pointer, tombstone legs, list-dir swaps).
 
-The store's DATA always moved through Spark jobs (``spark.read`` /
-``df.write`` work against any Hadoop-supported URI), but its metadata —
-the family manifest, the ``_VERSION`` pointer, per-leg ``_KIND`` /
-``_FOLDS`` markers, vacuum's directory reclaim, the parquet-footer
-stats — used local ``os``/``open`` calls, so a store on ``hdfs://`` or
-``s3a://`` could only be ADMINISTERED from a node mounting it locally:
-the same single-node residue VERDICT r10 flagged for the IVF fold, one
-layer deeper.
+Data always moves through Spark jobs (``spark.read`` / ``df.write`` work
+against any Hadoop-supported URI); only metadata goes through here, so
+a store or index on ``hdfs://`` or ``s3a://`` is administered from any
+driver, no local mount required.
 
-Dispatch is by path scheme:
+Dispatch is by path scheme (:func:`store_fs_for`, the one rule):
 
 - bare paths (``/tmp/...``) follow ``fs.defaultFS`` — the same rule as
-  Spark's data plane (round 13). With a local defaultFS (the default,
-  and every test/bench environment) they get :class:`LocalStoreFS`:
-  byte-identical to the old inline calls, zero Py4J traffic, so the hot
-  chain-resolver loops (``_kind`` reads per ``_legs_of`` walk) cost
-  what they always did. With an hdfs/viewfs defaultFS they resolve
-  through the JVM like any scheme path — a bare-path store and its
-  Spark-written parquet can never address different filesystems;
+  Spark's data plane. With a local defaultFS (the default, and every
+  test/bench environment) they get :class:`LocalStoreFS`: local
+  syscalls, zero Py4J traffic, so the hot chain-resolver loops
+  (``_kind`` reads per ``_legs_of`` walk) stay cheap. With an
+  hdfs/viewfs defaultFS they resolve through the JVM like any scheme
+  path — a bare-path store and its Spark-written parquet can never
+  address different filesystems;
 - scheme paths (``file:``, ``hdfs://``, ``s3a://``) get
   :class:`HadoopStoreFS` over the JVM FileSystem API. Text IO streams
   through commons-io; the ``_VERSION`` pointer swap uses
@@ -29,23 +27,30 @@ Dispatch is by path scheme:
   footer stats read row counts via parquet-hadoop's
   ``ParquetFileReader`` without touching data pages.
 
-Rename-atomicity is a PROBED CAPABILITY, not a documented caveat
-(round 12, VERDICT r11 ask #2): each adapter exposes
-``atomic_rename`` — True only for schemes where a rename is a single
-metadata operation readers can never observe half-done (local
-syscalls, HDFS, viewfs-over-those). On everything else (s3a/gs/...
-where rename is client-side copy+delete, and UNKNOWN schemes, which
-default to False so a new connector can only be safer than assumed)
-the CellStore switches its ``_VERSION`` commit to a rename-free
-generation protocol — see ``store.py::_commit_version`` — instead of
-relying on a "the window is milliseconds" argument. Every other
-rename in the engine happens inside dot-prefixed staging invisible to
-readers; the maintenance families that swap VISIBLE directories
-(``ann_index.py`` fold/compact) gate on this same flag.
+Both adapters share one contract: ``listdir``/``list_status`` of a
+missing path is ``[]``; ``remove``, ``read_text`` and ``rename`` of a
+missing path raise :class:`FileNotFoundError`; ``rename`` raises
+:class:`OSError` on any other failure; ``create_exclusive`` raises
+:class:`FileExistsError` when the path exists; ``isdir`` of a file is
+False. The ``test_adapter_contract`` test runs one sequence through
+both and pins it.
+
+Rename-atomicity is a PROBED CAPABILITY, not a documented caveat: each
+adapter exposes ``atomic_rename`` — True only for schemes where a
+rename is a single metadata operation readers can never observe
+half-done (local syscalls, HDFS, viewfs-over-those). On everything else
+(s3a/gs/... where rename is client-side copy+delete, and UNKNOWN
+schemes, which default to False so a new connector can only be safer
+than assumed) the CellStore's ``_VERSION`` commit and the IVF fold
+switch to the rename-free pointer-generation protocol implemented once
+here (:func:`resolve_generation` / :func:`publish_generation`). Every
+other rename in the engine happens inside dot-prefixed staging
+invisible to readers.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -90,18 +95,124 @@ def publish_text(fs, p: str, content: str) -> None:
         fs.write_text(p, content)
 
 
+def generation_numbers(fs, root: str, prefix: str) -> list[int]:
+    """Numbers ``n`` of every ``<root>/<prefix><n>`` pointer generation,
+    newest first, from one listing (staging leftovers such as
+    ``<prefix><n>.tmp`` and foreign names do not parse and are
+    skipped)."""
+    out = []
+    for name in fs.listdir(root):
+        if name.startswith(prefix):
+            try:
+                out.append(int(name[len(prefix):]))
+            except ValueError:
+                continue
+    return sorted(out, reverse=True)
+
+
+def resolve_generation(fs, root: str, prefix: str, parse, above: int = 0):
+    """``(n, parse(content))`` of the newest parsable pointer generation
+    ``<root>/<prefix><n>`` with ``n > above``, or None when there is
+    none. ``parse`` raises ValueError/KeyError on content that is not a
+    committed pointer. Two degraded states resolve instead of raising:
+
+    - **torn newest generation**: the create-if-absent publish is
+      all-or-nothing on object-store PUTs, but on flush-visible Hadoop
+      schemes (wasb/abfs) a writer crash between flush and close can
+      leave a half-written file. Unparsable content is pre-commit
+      garbage, not a committed pointer: fall back to the next-lower
+      parsable generation (the next publish or vacuum sweeps it).
+    - **vacuum race**: a generation listed a moment ago can be gone by
+      the time it is read (writers committed newer generations and
+      vacuum swept past it). Re-list and retry — newer generations are
+      then present, so each retry strictly advances; falling through to
+      older listed names instead would read states vacuum has already
+      reclaimed.
+    """
+    for _attempt in range(5):
+        raced = False
+        for n in generation_numbers(fs, root, prefix):
+            if n <= above:
+                break
+            p = os.path.join(root, f"{prefix}{n}")
+            try:
+                text = fs.read_text(p)
+            except FileNotFoundError:
+                raced = True  # vacuumed since the listing: re-list
+                break
+            try:
+                return n, parse(text)
+            except (ValueError, KeyError):
+                continue
+        if not raced:
+            return None
+    raise IOError(
+        f"{root}: the newest {prefix}<n> pointer vanished between listing "
+        "and read 5 times in a row — vacuum is racing this reader faster "
+        "than it can re-list (pointer retention is too small for the "
+        "write rate)"
+    )
+
+
+def publish_generation(
+    fs, root: str, prefix: str, n: int, content: str, parse, conflict
+) -> None:
+    """Create-if-absent publish of pointer generation
+    ``<root>/<prefix><n>``: exactly one writer wins each number. A
+    collision with UNPARSABLE content is torn garbage from a crashed
+    writer (``resolve_generation`` skips it, so a fresh writer computes
+    the same ``n``): sweep it and retry once — the create still
+    arbitrates if two writers both saw the garbage. A collision with a
+    parsable pointer is a concurrent writer: raise ``conflict`` (the
+    caller's exception class) loudly instead of last-writer-wins."""
+    target = os.path.join(root, f"{prefix}{n}")
+    for _attempt in range(2):
+        try:
+            fs.create_exclusive(target, content)
+            return
+        except FileExistsError:
+            try:
+                parse(fs.read_text(target))
+            except (ValueError, KeyError, FileNotFoundError):
+                try:
+                    fs.remove(target)
+                except FileNotFoundError:
+                    pass
+                continue
+            raise conflict(
+                f"commit of generation v{n} in {root} lost the "
+                f"create-if-absent race: {target} was published by a "
+                "concurrent writer between this writer's resolution and "
+                f"its commit. Single-writer contract violated — see "
+                f"{conflict.__name__} for recovery."
+            )
+    raise conflict(
+        f"commit of generation v{n} in {root} collided twice (a "
+        f"concurrent writer re-published {target} while this writer was "
+        "sweeping torn garbage)"
+    )
+
+
+def footer_row_count(fs, d: str) -> int:
+    """Rows in the parquet files under ``d``, from their FOOTERS only —
+    a driver-side metadata read, no Spark job, no data pages."""
+    return sum(
+        fs.parquet_num_rows(full)
+        for name, full, _sz in fs.walk_files(d)
+        if name.endswith(".parquet")
+    )
+
+
 def store_fs_for(spark, path: str):
-    """HadoopStoreFS for scheme URIs; bare paths follow ``fs.defaultFS``
-    (round 13, VERDICT r12 ask #6 / ADVICE r12 medium): LocalStoreFS —
-    the zero-JVM-traffic fast path — only when defaultFS is local, else
-    the JVM FileSystem resolved against defaultFS, exactly where
-    ``spark.read``/``df.write`` on the same bare string put the data.
-    The pre-r13 rule (bare == local, unconditionally) silently split the
-    two planes on clusters with an hdfs/viewfs defaultFS: the store's
-    parquet landed in HDFS while its pointer/manifest administration
-    addressed the driver's local disk. ``hadoop_fs.fs_for`` shares this
-    helper, so a bare-path CellStore and a bare-path IVF index can never
-    resolve differently."""
+    """HadoopStoreFS for scheme URIs; bare paths follow ``fs.defaultFS``:
+    LocalStoreFS — the zero-JVM-traffic fast path — only when defaultFS
+    is local, else the JVM FileSystem resolved against defaultFS,
+    exactly where ``spark.read``/``df.write`` on the same bare string
+    put the data. Every store, streaming state dir and IVF index
+    resolves through this one function, so their metadata can never
+    address different filesystems. Code that relied on bare paths
+    meaning "driver-local disk" under a non-local defaultFS must say so
+    explicitly with a ``file:`` URI."""
     if path_has_scheme(path):
         return HadoopStoreFS(spark, path)
     if default_fs_scheme(spark) == "file":
@@ -110,7 +221,7 @@ def store_fs_for(spark, path: str):
 
 
 class LocalStoreFS:
-    """The original inline behavior, verbatim — local syscalls only."""
+    """Local syscalls only — the bare-path fast path, no JVM traffic."""
 
     #: os.replace / os.rename are atomic on POSIX
     atomic_rename = True
@@ -125,13 +236,17 @@ class LocalStoreFS:
         return os.path.isdir(p)
 
     def listdir(self, p: str) -> list[str]:
-        """Child names; [] when the path is missing — ONE contract across
-        all three adapters (ADVICE r11: LocalStoreFS used to raise Python
-        FileNotFoundError, HadoopStoreFS a Py4J-wrapped Java one, and
-        hadoop_fs.HadoopFS returned [] — a caller catching one of the
-        three would behave differently per scheme)."""
+        """Child names; [] when the path is missing."""
         try:
             return os.listdir(p)
+        except FileNotFoundError:
+            return []
+
+    def list_status(self, p: str) -> list[tuple[str, bool]]:
+        """(name, is_dir) per child from one listing; [] when missing."""
+        try:
+            with os.scandir(p) as it:
+                return [(e.name, os.path.isdir(e.path)) for e in it]
         except FileNotFoundError:
             return []
 
@@ -192,6 +307,20 @@ class LocalStoreFS:
         )
 
 
+@contextlib.contextmanager
+def _missing_as_fnf(p: str):
+    """Map the JVM's ``java.io.FileNotFoundException`` to Python's
+    :class:`FileNotFoundError`, as the local adapter raises it."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        yield
+    except Py4JJavaError as e:
+        if "FileNotFoundException" in e.java_exception.getClass().getName():
+            raise FileNotFoundError(p) from e
+        raise
+
+
 class HadoopStoreFS:
     """JVM-FileSystem-backed metadata ops for scheme paths. Driver-side
     only; one FileSystem resolve per store instance."""
@@ -221,15 +350,22 @@ class HadoopStoreFS:
         )
 
     def listdir(self, p: str) -> list[str]:
-        """Child names; [] when the path is missing (see LocalStoreFS —
-        one contract across adapters)."""
+        return [name for name, _ in self.list_status(p)]
+
+    def list_status(self, p: str) -> list[tuple[str, bool]]:
+        """(name, is_dir) per child from ONE listStatus RPC — not a
+        listdir + per-entry isdir loop (matters on object stores)."""
         jp = self._Path(p)
         if not self._fs.exists(jp):
             return []
-        return [st.getPath().getName() for st in self._fs.listStatus(jp)]
+        return [
+            (st.getPath().getName(), bool(st.isDirectory()))
+            for st in self._fs.listStatus(jp)
+        ]
 
     def read_text(self, p: str) -> str:
-        stream = self._fs.open(self._Path(p))
+        with _missing_as_fnf(p):
+            stream = self._fs.open(self._Path(p))
         try:
             return self._jvm.org.apache.commons.io.IOUtils.toString(
                 stream, "UTF-8"
@@ -287,7 +423,9 @@ class HadoopStoreFS:
         self._fc.rename(self._Path(tmp), self._Path(p), opts)
 
     def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._Path(src), self._Path(dst)):
+        with _missing_as_fnf(src):
+            ok = self._fs.rename(self._Path(src), self._Path(dst))
+        if not ok:
             raise IOError(f"rename failed: {src} -> {dst}")
 
     def rmtree(self, p: str) -> None:
@@ -296,7 +434,10 @@ class HadoopStoreFS:
             self._fs.delete(jp, True)
 
     def remove(self, p: str) -> None:
-        self._fs.delete(self._Path(p), False)
+        # Hadoop's delete reports a missing path by returning false;
+        # raise like os.remove so callers see one contract
+        if not self._fs.delete(self._Path(p), False):
+            raise FileNotFoundError(p)
 
     def walk_files(self, d: str):
         jp = self._Path(d)

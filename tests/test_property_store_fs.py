@@ -184,16 +184,16 @@ def test_two_writer_ivf_pointer_cas_one_winner(tmp_path_factory, steps):
     winner per pointer number, losers raise ConcurrentIndexCommitError,
     and a fresh resolution always reads the max committed pointer
     parsably. Pure pointer-layer test (no Spark session needed):
-    the LocalFS adapter over a scratch dir."""
+    the LocalStoreFS adapter over a scratch dir."""
     from smoltable_spark.functions.ann_index import (
         ConcurrentIndexCommitError,
         _commit_listgen,
     )
     from smoltable_spark.functions.similarity import _ivf_pointer
-    from smoltable_spark.sources.hadoop_fs import LocalFS
+    from smoltable_spark.sources.store_fs import LocalStoreFS
 
     base = str(tmp_path_factory.mktemp("prop_ivf_cas"))
-    fs = LocalFS()
+    fs = LocalStoreFS()
     pending: list[int | None] = [None, None]
     wins: dict[int, int] = {}
     conflicts: list[tuple[int, int]] = []

@@ -259,7 +259,6 @@ def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
     import pyspark.sql.functions as F
 
     from smoltable_spark.functions import ann_index, similarity
-    from smoltable_spark.sources.hadoop_fs import LocalFS
     from smoltable_spark.sources.relational import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -269,23 +268,23 @@ def test_ivf_fold_on_rename_unsafe_scheme_goes_generational(
         spark, path, emb.filter(F.col("vec_id") == 6).select("vec_id")
     )
 
-    class UnsafeLocalFS(LocalFS):
+    class UnsafeLocalStoreFS(LocalStoreFS):
         scheme = "s3a"  # what the probe would report for an S3A index
         atomic_rename = False
 
         renames: list = []
 
         def rename(self, src, dst):
-            UnsafeLocalFS.renames.append((src, dst))
+            UnsafeLocalStoreFS.renames.append((src, dst))
             return super().rename(src, dst)
 
-    monkeypatch.setattr(ann_index, "fs_for", lambda _s, _b: UnsafeLocalFS())
+    monkeypatch.setattr(ann_index, "store_fs_for", lambda _s, _b: UnsafeLocalStoreFS())
     stats = ann_index.compact_ivf_index(spark, path)
     assert stats == {"tombstones": 1, "lists_rewritten": 1}
     assert similarity.ivf_tombstones(spark, path) is None
     # the commit point was a pointer CREATE; no rename of anything
     # reader-visible ever happened
-    assert UnsafeLocalFS.renames == []
+    assert UnsafeLocalStoreFS.renames == []
     assert os.path.exists(os.path.join(path, "_LISTGEN-v1"))
     m, gmap = similarity.ivf_list_generations(spark, path)
     assert m == 1 and set(gmap.values()) <= {0, 1}

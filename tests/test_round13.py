@@ -170,9 +170,8 @@ def test_bare_path_dispatch_follows_default_fs(spark, tmp_path):
     """Both adapters resolve a bare path the way Spark's data plane
     does: against ``fs.defaultFS``. With a non-local defaultFS (here a
     viewfs mount) the SAME bare string must address the SAME filesystem
-    through both adapters — pre-r13, the store/index metadata went to
+    through every adapter handle — pre-r13, the store/index metadata went to
     the driver's local disk while the data plane wrote to defaultFS."""
-    from smoltable_spark.sources.hadoop_fs import HadoopFS, LocalFS, fs_for
     from smoltable_spark.sources.store_fs import store_fs_for
 
     hc = spark._jsc.hadoopConfiguration()
@@ -183,10 +182,10 @@ def test_bare_path_dispatch_follows_default_fs(spark, tmp_path):
     hc.set("fs.defaultFS", "viewfs://dfx/")
     try:
         sfs = store_fs_for(spark, "/s/store")
-        afs = fs_for(spark, "/s/store")
+        afs = store_fs_for(spark, "/s/ivf")
         assert isinstance(sfs, HadoopStoreFS)
-        assert isinstance(afs, HadoopFS)
-        # identical resolution: a file created through one adapter is
+        assert isinstance(afs, HadoopStoreFS)
+        # identical resolution: a file created through one handle is
         # visible through the other AND physically under the mount target
         sfs.write_text("/s/probe.txt", "x")
         assert afs.exists("/s/probe.txt")
@@ -194,9 +193,8 @@ def test_bare_path_dispatch_follows_default_fs(spark, tmp_path):
         assert sfs.scheme == afs.scheme == "viewfs"
     finally:
         hc.set("fs.defaultFS", old)
-    # local defaultFS: both keep the zero-JVM fast path
+    # local defaultFS: the zero-JVM fast path
     assert isinstance(store_fs_for(spark, str(tmp_path)), LocalStoreFS)
-    assert isinstance(fs_for(spark, str(tmp_path)), LocalFS)
 
 
 # ---------------------------------------------------------------------------
@@ -323,14 +321,14 @@ def test_cpdel_ivf_generation_fold_for_real(spark, tmp_path):
         ivf_tombstones,
         query_ivf_index,
     )
-    from smoltable_spark.sources.hadoop_fs import fs_for
     from smoltable_spark.sources.relational import load_table
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = _cpdel(spark, tmp_path)
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     path = base + "/ivf"
     build_ivf_index(emb, path, n_centroids=8)
-    fs = fs_for(spark, path)
+    fs = store_fs_for(spark, path)
     assert fs.scheme == "cpdel" and fs.atomic_rename is False
     ann_index.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 9).select("vec_id")
@@ -383,7 +381,6 @@ def test_ivf_pointer_read_survives_vacuum_race(tmp_path):
     import json
 
     from smoltable_spark.functions.similarity import _ivf_pointer
-    from smoltable_spark.sources.hadoop_fs import LocalFS
 
     base = str(tmp_path)
     with open(f"{base}/_LISTGEN-v1", "w") as fh:
@@ -391,7 +388,7 @@ def test_ivf_pointer_read_survives_vacuum_race(tmp_path):
     with open(f"{base}/_LISTGEN-v2", "w") as fh:
         fh.write('{"m": 2, "li')  # torn newest: must fall back to v1
 
-    class RacingFS(LocalFS):
+    class RacingFS(LocalStoreFS):
         def __init__(self):
             self.raced = False
 
@@ -411,8 +408,56 @@ def test_ivf_pointer_read_survives_vacuum_race(tmp_path):
     # and without the race, the torn newest still falls back to v1
     with open(f"{base}/_LISTGEN-v1", "w") as fh:
         fh.write(json.dumps({"m": 1, "lists": {"3": 1}}))
-    m2, gmap2, _ = _ivf_pointer(LocalFS(), base)
+    m2, gmap2, _ = _ivf_pointer(LocalStoreFS(), base)
     assert (m2, gmap2) == (1, {3: 1})
+
+
+def test_ivf_pointer_relists_when_vacuum_sweeps_every_listed_pointer(tmp_path):
+    """A reader lists _LISTGEN-v1 and -v2; before its first read a
+    maintenance writer commits v3 and v4 and vacuum sweeps v1 and v2.
+    Every listed name is now gone, but the index HAS a pointer: the
+    resolver must re-list and return v4 — not (0, {}), which would
+    mean "never folded" and send serving to the root partition
+    discovery (stale or reclaimed plain dirs, live .gen dirs skipped)."""
+    import json
+    import os
+
+    from smoltable_spark.functions.similarity import _ivf_pointer
+
+    base = str(tmp_path)
+
+    def put(m):
+        with open(f"{base}/_LISTGEN-v{m}", "w") as fh:
+            fh.write(json.dumps({"m": m, "lists": {"3": m}}))
+
+    put(1)
+    put(2)
+
+    class RacingFS:
+        """Delegates to the local adapter; the first pointer read runs
+        the writer + vacuum interleaving, then finds its file gone."""
+
+        def __init__(self, inner):
+            self._inner = inner
+            self.raced = False
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def read_text(self, p):
+            if not self.raced:
+                self.raced = True
+                put(3)
+                put(4)
+                os.remove(f"{base}/_LISTGEN-v1")
+                os.remove(f"{base}/_LISTGEN-v2")
+            return self._inner.read_text(p)
+
+    fs = RacingFS(LocalStoreFS())
+    m, gmap, meta = _ivf_pointer(fs, base)
+    assert fs.raced
+    assert (m, gmap) == (4, {3: 4})
+    assert meta["m"] == 4
 
 
 def test_ivf_index_health_tracks_maintenance(spark, tmp_path, unsafe_ann):
@@ -526,8 +571,8 @@ def test_cpdel_legacy_fold_crash_leaves_evidence(spark, tmp_path):
 
     from smoltable_spark.functions import ann_index
     from smoltable_spark.functions.similarity import build_ivf_index
-    from smoltable_spark.sources.hadoop_fs import fs_for
     from smoltable_spark.sources.relational import load_table
+    from smoltable_spark.sources.store_fs import store_fs_for
 
     base = _cpdel(spark, tmp_path)
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -536,7 +581,7 @@ def test_cpdel_legacy_fold_crash_leaves_evidence(spark, tmp_path):
     ann_index.delete_from_ivf_index(
         spark, path, emb.filter(F.col("vec_id") == 4).select("vec_id")
     )
-    fsa = fs_for(spark, path)
+    fsa = store_fs_for(spark, path)
     fsa._fs.getConf().set("fs.cpdel.rename.fault", "fail-mid-copy")
     try:
         with pytest.raises(Exception, match="fault injection"):
@@ -565,20 +610,18 @@ class _UnsafeAnnFS:
     syscalls for the ANN maintenance family."""
 
     def __new__(cls):
-        from smoltable_spark.sources.hadoop_fs import LocalFS
-
-        class UnsafeLocalFS(LocalFS):
+        class UnsafeLocalStoreFS(LocalStoreFS):
             scheme = "s3a"
             atomic_rename = False
 
-        return UnsafeLocalFS()
+        return UnsafeLocalStoreFS()
 
 
 @pytest.fixture()
 def unsafe_ann(monkeypatch):
     from smoltable_spark.functions import ann_index
 
-    monkeypatch.setattr(ann_index, "fs_for", lambda _s, _b: _UnsafeAnnFS())
+    monkeypatch.setattr(ann_index, "store_fs_for", lambda _s, _b: _UnsafeAnnFS())
 
 
 def _topk(spark, path, queries, k=5):

@@ -52,6 +52,57 @@ def test_fs_dispatch_by_scheme(spark, tmp_path):
     # hadoop-aws jars, so constructing the FileSystem is not testable here
 
 
+@pytest.mark.parametrize("scheme", ["bare", "file"])
+def test_adapter_contract(spark, tmp_path, scheme):
+    """One sequence, both adapters, identical results: the store and the
+    IVF index share these adapters, so a primitive that behaves
+    differently per scheme would make the same maintenance step succeed
+    on one filesystem and fail (or silently no-op) on the other."""
+    from smoltable_spark.sources.store_fs import footer_row_count
+
+    root = str(tmp_path / "c")
+    if scheme == "file":
+        root = "file:" + root
+    fs = store_fs_for(spark, root)
+    assert type(fs) is (LocalStoreFS if scheme == "bare" else HadoopStoreFS)
+    fs.makedirs(root + "/d")
+    fs.write_text(root + "/f.txt", "x")
+    # list_status: names and is-dir flags from one listing
+    assert sorted(fs.list_status(root)) == [("d", True), ("f.txt", False)]
+    assert sorted(fs.listdir(root)) == ["d", "f.txt"]
+    assert fs.isdir(root + "/d") is True
+    assert fs.isdir(root + "/f.txt") is False
+    # flat-dir footer row count: parquet files only, from footers
+    fs.put_parquet_int64(root + "/d/part-0.parquet", "x", [1, 2, 3])
+    fs.put_parquet_int64(root + "/d/part-1.parquet", "x", [4, 5, 6, 7])
+    fs.write_text(root + "/d/_SUCCESS", "")
+    assert footer_row_count(fs, root + "/d") == 7
+    assert footer_row_count(fs, root + "/nope") == 0
+    # missing paths: listings are empty, remove/read/rename raise
+    assert fs.listdir(root + "/nope") == []
+    assert fs.list_status(root + "/nope") == []
+    assert fs.isdir(root + "/nope") is False
+    with pytest.raises(FileNotFoundError):
+        fs.remove(root + "/nope")
+    with pytest.raises(FileNotFoundError):
+        fs.read_text(root + "/nope")
+    with pytest.raises(FileNotFoundError):
+        fs.rename(root + "/nope", root + "/nope2")
+    # rename moves the file; remove deletes it, then raises
+    fs.rename(root + "/f.txt", root + "/g.txt")
+    assert not fs.exists(root + "/f.txt")
+    assert fs.read_text(root + "/g.txt") == "x"
+    fs.remove(root + "/g.txt")
+    assert not fs.exists(root + "/g.txt")
+    with pytest.raises(FileNotFoundError):
+        fs.remove(root + "/g.txt")
+    # create-if-absent
+    fs.create_exclusive(root + "/p", "1")
+    with pytest.raises(FileExistsError):
+        fs.create_exclusive(root + "/p", "2")
+    assert fs.read_text(root + "/p") == "1"
+
+
 def test_full_lifecycle_on_file_uri(spark, tmp_path, mkuri):
     store = CellStore(spark, mkuri(tmp_path / "store_uri"))
     store.save_families([ColumnFamilyDef("f")])
