@@ -305,7 +305,7 @@ WATCHLIST = [
 
 #: Size of the isolated re-measure band (VERDICT r12 ask #4): after the
 #: sweep, the this-many slowest warm queries are re-measured SOLO
-#: (min-of-3, the same _isolated_min protocol) and their sum recorded.
+#: (min-of-3, the same isolated_min protocol) and their sum recorded.
 #: On a VM with ±20% between-session drift, the in-sweep total is the
 #: noisier number (sweep interference inflates individual rows up to
 #: 2.5×, see SCALE.md r11); the isolated band sum is the drift-robust
@@ -365,7 +365,6 @@ COLD_GATED = ["stream_sessionize", "stream_click_attribution", "stream_windowed_
 def _latest_round() -> tuple[int, str] | None:
     """(N, path) of the latest driver-recorded BENCH_r{N}.json."""
     import glob
-    import re
 
     here = os.path.dirname(os.path.abspath(__file__))
     rounds = []
@@ -376,7 +375,7 @@ def _latest_round() -> tuple[int, str] | None:
     return max(rounds) if rounds else None
 
 
-def _load_prev(sf: float | None = None) -> tuple[dict | None, str | None]:
+def _load_prev(sf: float | None = None, cpus: int | None = None) -> tuple[dict | None, str | None]:
     """Previous-round per-query timings for the regression gate.
 
     Primary source: the latest driver BENCH_r{N}.json. The driver wraps
@@ -386,6 +385,10 @@ def _load_prev(sf: float | None = None) -> tuple[dict | None, str | None]:
     "queries" map falls through to BENCH_LOCAL.json, the full record this
     script commits on every run precisely so the baseline survives
     driver-side truncation.
+
+    A record measured at another ``sf`` or ``cpus`` is no baseline: an
+    8-core sweep gated against a 32-core run hides real regressions
+    (median-drift normalization floors at 1.0).
     """
     here = os.path.dirname(os.path.abspath(__file__))
     latest = _latest_round()
@@ -412,8 +415,50 @@ def _load_prev(sf: float | None = None) -> tuple[dict | None, str | None]:
             # the regression gate)
             if sf is not None and prev.get("sf") != sf:
                 continue
+            if cpus is not None and prev.get("cpus") != cpus:
+                continue
             return prev, label
     return None, None
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Absorb one-time infrastructure startup so per-query timings measure
+    execution — JVM + codegen, parquet footer/metadata reads for each
+    input table, and the Arrow/Python worker pool (mapInPandas spawns
+    pyspark.daemon workers on first use, ~2 s once per session)."""
+    from pyspark.sql import functions as F
+
+    from smoltable_spark.sources.relational import TABLE_NAMES, load_table
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in TABLE_NAMES:
+        try:
+            load_table(spark, sf_dir, t).count()
+        except Exception:
+            pass
+    spark.range(32).mapInPandas(lambda it: it, "id long").count()
+    small = spark.range(100).withColumnRenamed("id", "k")
+    (
+        spark.range(10_000)
+        .withColumnRenamed("id", "k")
+        .join(F.broadcast(small), "k")
+        .groupBy((F.col("k") % 10).alias("g"))
+        .count()
+        .count()
+    )
+
+
+def isolated_min(spark, fn, sf_dir: str, runs: int = 3) -> float:
+    """Solo re-measure, min of ``runs`` timed counts: the ONE isolation
+    protocol shared by the gate's isolated-confirm pass, the watchlist,
+    the isolated top band and tools/iso_measure.py, so their numbers stay
+    comparable by construction."""
+    iso = []
+    for _ in range(runs):
+        t0 = time.time()
+        fn(spark, sf_dir).count()
+        iso.append(time.time() - t0)
+    return round(min(iso), 3)
 
 
 def main():
@@ -426,41 +471,7 @@ def main():
     spark = get_spark("smoltable_spark_bench", cpus=cpus, shuffle_partitions=cpus)
     qs = entrymod.queries()
 
-    # warmup: absorb one-time infrastructure startup so per-query timings
-    # measure execution — JVM + codegen, parquet footer/metadata reads for
-    # each input table, and the Arrow/Python worker pool (mapInPandas
-    # spawns pyspark.daemon workers on first use, ~2 s once per session)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from smoltable_spark.sources.relational import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        try:
-            load_table(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    spark.range(32).mapInPandas(lambda it: it, "id long").count()
-    from pyspark.sql import functions as _F
-
-    small = spark.range(100).withColumnRenamed("id", "k")
-    (
-        spark.range(10_000)
-        .withColumnRenamed("id", "k")
-        .join(_F.broadcast(small), "k")
-        .groupBy((_F.col("k") % 10).alias("g"))
-        .count()
-        .count()
-    )
-
-    def _isolated_min(name: str, runs: int = 3) -> float:
-        """Solo re-measure: the ONE isolation protocol shared by the
-        gate's isolated-confirm pass and the watchlist, so their numbers
-        stay comparable by construction."""
-        iso = []
-        for _ in range(runs):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            iso.append(time.time() - t0)
-        return round(min(iso), 3)
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
@@ -498,7 +509,7 @@ def main():
     suppressed_flags = {}
     prev_total = None
     env_drift = None
-    prev, prev_source = _load_prev(float(sf) if sf else None)
+    prev, prev_source = _load_prev(float(sf) if sf else None, cpus)
     if prev is not None:
         prev_total = prev.get("value")
         prev_pending = set(prev.get("pending_flags") or {})
@@ -557,7 +568,7 @@ def main():
             # min — and only record a regression the isolated time confirms,
             # so the committed record and the driver record stop disagreeing.
             for name, info in candidates.items():
-                iso_min = _isolated_min(name)
+                iso_min = isolated_min(spark, qs[name], sf_dir)
                 info["isolated"] = iso_min
                 p = info["prev"]
                 r_iso = iso_min / p
@@ -614,7 +625,7 @@ def main():
     for name in WATCHLIST:
         if name not in qs:
             continue
-        watch_isolated[name] = _isolated_min(name)
+        watch_isolated[name] = isolated_min(spark, qs[name], sf_dir)
         print(
             f"# watch {name}: sweep {timings.get(name)}s -> isolated "
             f"{watch_isolated[name]}s",
@@ -628,7 +639,7 @@ def main():
     iso_band_names = [
         n for n, _t in sorted(timings.items(), key=lambda kv: -kv[1])
     ][:ISO_BAND]
-    iso_top = {n: _isolated_min(n) for n in iso_band_names}
+    iso_top = {n: isolated_min(spark, qs[n], sf_dir) for n in iso_band_names}
     iso_top_sum = round(sum(iso_top.values()), 3)
     prev_iso = (prev or {}).get("iso_top15")
     iso_prev_sum = None
@@ -797,6 +808,7 @@ def _write_records(here: str, result: dict) -> None:
         hist = {}
     hist[round_key] = {
         "sf": result["sf"],
+        "cpus": result.get("cpus"),
         "total": result["value"],
         "env_drift_median_ratio": result["env_drift_median_ratio"],
         "queries": result["queries"],

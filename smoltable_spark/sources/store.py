@@ -93,6 +93,7 @@ from smoltable_spark.api import ColumnFamilyDef
 from smoltable_spark.schema import CELL_COLUMNS
 from smoltable_spark.sources.store_fs import (
     footer_row_count,
+    generation_number,
     publish_generation,
     publish_text,
     resolve_generation,
@@ -1010,17 +1011,14 @@ class CellStore:
             n = self._dirname_version(name)
             if n is not None and n <= cur and n not in needed:
                 self._fs.rmtree(os.path.join(self.path, name))
-            elif name.startswith(_VERSION_GEN_PREFIX):
-                # rename-free pointer generations: sweep those below the
-                # retention cutoff — never the max (readers resolve
-                # max(n), and a reader that listed before this vacuum
-                # can hold at most a generation ≥ oldest_kept)
-                try:
-                    g = int(name[len(_VERSION_GEN_PREFIX):])
-                except ValueError:
-                    continue
-                if g < oldest_kept:
-                    self._fs.remove(os.path.join(self.path, name))
+                continue
+            # rename-free pointer generations: sweep those below the
+            # retention cutoff — never the max (readers resolve max(n), and
+            # a reader that listed before this vacuum can hold at most a
+            # generation ≥ oldest_kept)
+            g = generation_number(name, _VERSION_GEN_PREFIX)
+            if g is not None and g < oldest_kept:
+                self._fs.remove(os.path.join(self.path, name))
 
     # -- stats (S8 parity) -------------------------------------------------
 

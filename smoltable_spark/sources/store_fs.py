@@ -95,19 +95,23 @@ def publish_text(fs, p: str, content: str) -> None:
         fs.write_text(p, content)
 
 
+def generation_number(name: str, prefix: str) -> int | None:
+    """``n`` when ``name`` is the pointer generation ``<prefix><n>``, else
+    None (staging leftovers such as ``<prefix><n>.tmp`` and foreign names
+    do not parse)."""
+    if not name.startswith(prefix):
+        return None
+    try:
+        return int(name[len(prefix):])
+    except ValueError:
+        return None
+
+
 def generation_numbers(fs, root: str, prefix: str) -> list[int]:
     """Numbers ``n`` of every ``<root>/<prefix><n>`` pointer generation,
-    newest first, from one listing (staging leftovers such as
-    ``<prefix><n>.tmp`` and foreign names do not parse and are
-    skipped)."""
-    out = []
-    for name in fs.listdir(root):
-        if name.startswith(prefix):
-            try:
-                out.append(int(name[len(prefix):]))
-            except ValueError:
-                continue
-    return sorted(out, reverse=True)
+    newest first, from one listing."""
+    nums = (generation_number(name, prefix) for name in fs.listdir(root))
+    return sorted((n for n in nums if n is not None), reverse=True)
 
 
 def resolve_generation(fs, root: str, prefix: str, parse, above: int = 0):

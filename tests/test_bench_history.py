@@ -129,7 +129,7 @@ def test_write_records_atomic_into_tmpdir(tmp_path, monkeypatch):
     (tmp_path / "BENCH_HISTORY.json").write_text('{"r05": {tor')  # torn
     result = {
         "metric": "total_headline_sec", "value": 1.23, "unit": "sec",
-        "queries": {"q": 0.5}, "cold_queries": {"q": 0.9}, "sf": 0.1,
+        "queries": {"q": 0.5}, "cold_queries": {"q": 0.9}, "sf": 0.1, "cpus": 32,
         "prev_round_total": None, "prev_source": None,
         "env_drift_median_ratio": 1.0, "regressions": {},
         "cold_regressions": {},
@@ -141,3 +141,23 @@ def test_write_records_atomic_into_tmpdir(tmp_path, monkeypatch):
     assert local == result
     hist = json.loads((tmp_path / "BENCH_HISTORY.json").read_text())
     assert hist["r06"]["total"] == 1.23 and hist["r06"]["queries"] == {"q": 0.5}
+    assert hist["r06"]["cpus"] == 32
+
+
+def test_load_prev_refuses_baseline_from_another_core_count(tmp_path, monkeypatch):
+    """The committed BENCH_LOCAL.json (the driver's 8-core sweep) must
+    not be the baseline of a 32-core run: 8 cores read ~1.2x slower by
+    geomean, which hides real regressions under the 1.5x bar."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "BENCH_LOCAL.json")) as fh:
+        local = json.load(fh)
+    other = 32 if local["cpus"] != 32 else 8
+    here = str(tmp_path)
+    with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
+        json.dump(local, fh)
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda p: os.path.join(here, "bench.py")
+    )
+    assert bench._load_prev(local["sf"], other) == (None, None)
+    prev, source = bench._load_prev(local["sf"], local["cpus"])
+    assert source == "BENCH_LOCAL.json" and prev == local

@@ -146,11 +146,16 @@ def test_vacuum_sweeps_old_generations_keeps_retained(spark, tmp_path):
     s.save_families([ColumnFamilyDef("f")])
     for i in range(5):
         _append(spark, s, f"a{i}")
+    # a crashed generation write's staging leftover and a foreign name do
+    # not parse as generations: vacuum leaves them alone
+    for leftover in ("_VERSION-v1.tmp", "_VERSION-vx"):
+        with open(os.path.join(s.path, leftover), "w") as fh:
+            fh.write("{")
     s.vacuum(keep_last=2)
     gens = sorted(
         n for n in os.listdir(s.path) if n.startswith(_VERSION_GEN_PREFIX)
     )
-    assert gens == ["_VERSION-v4", "_VERSION-v5"]
+    assert gens == ["_VERSION-v1.tmp", "_VERSION-v4", "_VERSION-v5", "_VERSION-vx"]
     assert s.current_version() == 5
 
 

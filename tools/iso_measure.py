@@ -1,5 +1,5 @@
 """Isolated min-of-N re-measure of named registry queries — the same
-protocol as bench.py's _isolated_min (fresh session, full warmup, solo
+protocol as bench.py's ``isolated_min`` (fresh session, full warmup, solo
 runs) so numbers are comparable to the gate's isolated-confirm rows.
 
 Usage: python tools/iso_measure.py q1 q2 ... [--runs 3] [--tag label]
@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,42 +33,17 @@ def main() -> None:
 
     from smoltable_spark.session import get_spark
     import __spark_entry__ as entrymod
+    from bench import isolated_min, warm_up
 
     spark = get_spark("smoltable_spark_iso", cpus=cpus, shuffle_partitions=cpus)
     qs = entrymod.queries()
 
-    # identical warmup to bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from smoltable_spark.sources.relational import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        try:
-            load_table(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    spark.range(32).mapInPandas(lambda it: it, "id long").count()
-    from pyspark.sql import functions as _F
-
-    small = spark.range(100).withColumnRenamed("id", "k")
-    (
-        spark.range(10_000)
-        .withColumnRenamed("id", "k")
-        .join(_F.broadcast(small), "k")
-        .groupBy((_F.col("k") % 10).alias("g"))
-        .count()
-        .count()
-    )
+    warm_up(spark, sf_dir)
 
     out: dict[str, float] = {}
     for name in names:
-        times = []
-        for _ in range(runs):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            times.append(time.time() - t0)
-        out[name] = round(min(times), 3)
-        print(f"# {name}: min {out[name]}s of {[round(t,3) for t in times]}",
-              file=sys.stderr)
+        out[name] = isolated_min(spark, qs[name], sf_dir, runs)
+        print(f"# {name}: min {out[name]}s of {runs}", file=sys.stderr)
     print(json.dumps({"tag": tag, "queries": out}))
 
 
